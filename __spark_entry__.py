@@ -11230,7 +11230,6 @@ _COALESCED_FINAL = {
     "wilcoxon_signed",
     "winnow_pairs",
     "wl_colors",
-    "wl_colors",
 }
 
 

@@ -9,10 +9,11 @@ codegen — no Python worker, no Arrow transfer.
 MEASURED OUTCOME (why this is NOT the pipeline default): at local[4] over
 10^6 docs the codegen tree runs 19-23 s vs 2-5 s for the Arrow/NumPy pass —
 ~50 scalar java.lang.Math trig calls per row lose ~8x to SIMD-vectorized
-NumPy over Arrow batches. The module stays as (a) the parity cross-check for
-the NumPy kernels (tests/test_geodesy_cols.py pins coords to 1e-9 deg and
-cell IDs exactly), and (b) the escape hatch for deployments that cannot run
-Python workers.
+NumPy over Arrow batches. The module stays as the parity cross-check for the
+NumPy kernels: ``footprint_cells_cols`` is the codegen reference of
+``plans.parse.with_footprint_cells`` (tests/test_geodesy_cols.py pins coords
+to 1e-9 deg and cell IDs exactly). It also holds the column expressions both
+footprint stages share: the gantry gate + kernel inputs and the GeoJSON ring.
 
 Numerical parity: java.lang.Math and NumPy's libm agree to ~1 ulp on
 sin/cos/sqrt; the pipeline consumes these values through boundary-safe
@@ -30,7 +31,7 @@ tree stays constant-size instead of unrolling 26 rotation steps.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import geodesy as G
@@ -304,3 +305,73 @@ def footprint_corner_cols(
         "ne_lon": ne_lon, "ne_lat": ne_lat,
         "nw_lon": nw_lon, "nw_lat": nw_lat,
     }
+
+
+GEOJSON_POLYGON_FMT = (
+    '{"type":"Polygon","coordinates":[[[%.10f,%.10f],[%.10f,%.10f],'
+    '[%.10f,%.10f],[%.10f,%.10f],[%.10f,%.10f]]]}'
+)
+
+
+def footprint_inputs(parsed: DataFrame) -> tuple[DataFrame, list[Column]]:
+    """Rows with a gantry position, plus the six footprint kernel inputs
+    (pos_x, pos_y, cambox_x, cambox_y, fov_x, fov_y). Missing camera-box
+    metadata (nullable-section path) falls back to zero offset / zero FOV —
+    the footprint degenerates to the gantry point, matching the reference's
+    'centroid only, no bounding box' branch (``terra_sensorposition.py:66-72``)."""
+    df = parsed.filter(F.col("pos_x").isNotNull() & F.col("pos_y").isNotNull())
+    zero = F.lit(0.0)
+    return df, [
+        F.col("pos_x"),
+        F.col("pos_y"),
+        F.coalesce("cambox_x", zero),
+        F.coalesce("cambox_y", zero),
+        F.coalesce("fov_x", zero),
+        F.coalesce("fov_y", zero),
+    ]
+
+
+def footprint_geojson_col(corner) -> Column:
+    """GeoJSON polygon string built JVM-side from the corner doubles
+    (``corner(name)`` -> Column, frozen %.10f repr), ring closed
+    sw -> se -> ne -> nw -> sw with the one-extra-nesting shape of
+    ``terra_sensorposition.py:73-78``."""
+    args = []
+    for k in ("sw", "se", "ne", "nw", "sw"):
+        args += [corner(f"{k}_lon"), corner(f"{k}_lat")]
+    return F.format_string(GEOJSON_POLYGON_FMT, *args)
+
+
+def footprint_cells_cols(
+    parsed: DataFrame, h3_res: int = 9, s2_level: int = 16
+) -> DataFrame:
+    """Codegen-only reference of ``plans.parse.with_footprint_cells``: the
+    same output columns with no Python worker (parity-pinned by
+    tests/test_geodesy_cols.py; ~8x slower than the Arrow path, see the
+    module docstring)."""
+    df, inputs = footprint_inputs(parsed)
+    corners = footprint_corner_cols(*inputs)
+    # PROJECTION BOUNDARY: the ten UTM-series trees land as real columns
+    # here; everything below references the aliases (see
+    # footprint_corner_cols on why this must not be inlined).
+    df = df.select("*", *[c.alias(f"_fp_{k}") for k, c in corners.items()])
+
+    def r(k: str) -> Column:
+        return F.col(f"_fp_{k}")
+
+    lats = [r(f"{k}_lat") for k in ("sw", "se", "ne", "nw")]
+    lons = [r(f"{k}_lon") for k in ("sw", "se", "ne", "nw")]
+    out = df.select(
+        "*",
+        r("centroid_lat").alias("centroid_lat"),
+        r("centroid_lon").alias("centroid_lon"),
+        F.least(*lats).alias("min_lat"),
+        F.greatest(*lats).alias("max_lat"),
+        F.least(*lons).alias("min_lon"),
+        F.greatest(*lons).alias("max_lon"),
+        h3_encode_col(r("centroid_lat"), r("centroid_lon"), h3_res).alias("cell_r9"),
+        h3_encode_col(r("centroid_lat"), r("centroid_lon"), 13).alias("cell_r13"),
+        footprint_geojson_col(r).alias("footprint"),
+    )
+    out = with_s2_encode(out, "centroid_lat", "centroid_lon", s2_level)
+    return out.drop(*[f"_fp_{k}" for k in corners])

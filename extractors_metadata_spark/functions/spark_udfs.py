@@ -26,6 +26,28 @@ FOOTPRINT_SCHEMA = (
 FOOTPRINT_CELLS_SCHEMA = FOOTPRINT_SCHEMA + ", cell_r9 long, s2_cell long, cell_r13 long"
 
 
+def _footprint_frame(px: pd.Series, py: pd.Series, cbx: pd.Series, cby: pd.Series,
+                     fx: pd.Series, fy: pd.Series) -> dict:
+    """NumPy footprint kernel over one Arrow batch -> FOOTPRINT_SCHEMA columns."""
+    c_lat, c_lon, ring = footprint_from_metadata(
+        px.to_numpy(np.float64), py.to_numpy(np.float64),
+        cbx.to_numpy(np.float64), cby.to_numpy(np.float64),
+        fx.to_numpy(np.float64), fy.to_numpy(np.float64),
+    )
+    lons = ring[:, :4, 0]
+    lats = ring[:, :4, 1]
+    return {
+        "centroid_lat": c_lat,
+        "centroid_lon": c_lon,
+        "sw_lon": ring[:, 0, 0], "sw_lat": ring[:, 0, 1],
+        "se_lon": ring[:, 1, 0], "se_lat": ring[:, 1, 1],
+        "ne_lon": ring[:, 2, 0], "ne_lat": ring[:, 2, 1],
+        "nw_lon": ring[:, 3, 0], "nw_lat": ring[:, 3, 1],
+        "min_lat": lats.min(axis=1), "max_lat": lats.max(axis=1),
+        "min_lon": lons.min(axis=1), "max_lon": lons.max(axis=1),
+    }
+
+
 def footprint_cells_udf(h3_res: int = 9, s2_level: int = 16):
     """Fused footprint + H3 + S2 in ONE Arrow pass (each extra scalar UDF adds
     a full JVM<->Python round trip over the table; at 10^12 rows that is the
@@ -34,31 +56,15 @@ def footprint_cells_udf(h3_res: int = 9, s2_level: int = 16):
     @pandas_udf(FOOTPRINT_CELLS_SCHEMA)
     def _f(px: pd.Series, py: pd.Series, cbx: pd.Series, cby: pd.Series,
            fx: pd.Series, fy: pd.Series) -> pd.DataFrame:
-        c_lat, c_lon, ring = footprint_from_metadata(
-            px.to_numpy(np.float64), py.to_numpy(np.float64),
-            cbx.to_numpy(np.float64), cby.to_numpy(np.float64),
-            fx.to_numpy(np.float64), fy.to_numpy(np.float64),
-        )
-        lons = ring[:, :4, 0]
-        lats = ring[:, :4, 1]
-        return pd.DataFrame(
-            {
-                "centroid_lat": c_lat,
-                "centroid_lon": c_lon,
-                "sw_lon": ring[:, 0, 0], "sw_lat": ring[:, 0, 1],
-                "se_lon": ring[:, 1, 0], "se_lat": ring[:, 1, 1],
-                "ne_lon": ring[:, 2, 0], "ne_lat": ring[:, 2, 1],
-                "nw_lon": ring[:, 3, 0], "nw_lat": ring[:, 3, 1],
-                "min_lat": lats.min(axis=1), "max_lat": lats.max(axis=1),
-                "min_lon": lons.min(axis=1), "max_lon": lons.max(axis=1),
-                "cell_r9": hexgrid.h3_encode(c_lat, c_lon, h3_res),
-                "s2_cell": s2quad.s2_encode(c_lat, c_lon, s2_level),
-                # join-resolution cell precomputed here so the spatial join
-                # needs no second encode pass (north star: encode cells once
-                # in batched columnar passes)
-                "cell_r13": hexgrid.h3_encode(c_lat, c_lon, 13),
-            }
-        )
+        out = _footprint_frame(px, py, cbx, cby, fx, fy)
+        c_lat, c_lon = out["centroid_lat"], out["centroid_lon"]
+        out["cell_r9"] = hexgrid.h3_encode(c_lat, c_lon, h3_res)
+        out["s2_cell"] = s2quad.s2_encode(c_lat, c_lon, s2_level)
+        # join-resolution cell precomputed here so the spatial join needs no
+        # second encode pass (north star: encode cells once in batched
+        # columnar passes)
+        out["cell_r13"] = hexgrid.h3_encode(c_lat, c_lon, 13)
+        return pd.DataFrame(out)
 
     return _f
 
@@ -69,25 +75,7 @@ def footprint_udf():
     @pandas_udf(FOOTPRINT_SCHEMA)
     def _f(px: pd.Series, py: pd.Series, cbx: pd.Series, cby: pd.Series,
            fx: pd.Series, fy: pd.Series) -> pd.DataFrame:
-        c_lat, c_lon, ring = footprint_from_metadata(
-            px.to_numpy(np.float64), py.to_numpy(np.float64),
-            cbx.to_numpy(np.float64), cby.to_numpy(np.float64),
-            fx.to_numpy(np.float64), fy.to_numpy(np.float64),
-        )
-        lons = ring[:, :4, 0]
-        lats = ring[:, :4, 1]
-        return pd.DataFrame(
-            {
-                "centroid_lat": c_lat,
-                "centroid_lon": c_lon,
-                "sw_lon": ring[:, 0, 0], "sw_lat": ring[:, 0, 1],
-                "se_lon": ring[:, 1, 0], "se_lat": ring[:, 1, 1],
-                "ne_lon": ring[:, 2, 0], "ne_lat": ring[:, 2, 1],
-                "nw_lon": ring[:, 3, 0], "nw_lat": ring[:, 3, 1],
-                "min_lat": lats.min(axis=1), "max_lat": lats.max(axis=1),
-                "min_lon": lons.min(axis=1), "max_lon": lons.max(axis=1),
-            }
-        )
+        return pd.DataFrame(_footprint_frame(px, py, cbx, cby, fx, fy))
 
     return _f
 

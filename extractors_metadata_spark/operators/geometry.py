@@ -20,7 +20,7 @@ def raycast_contains(x1, y1, x2, y2, px, py,
     """Exact ray-cast PIP over PER-ROW edge arrays (n, kmax): row i tests
     point (px[i], py[i]) against its own NaN-padded edge set. Shared by
     ``PreparedPolygons.contains`` (broadcast dim) and the big-dim path
-    (``pip_knn.pip_join_bigdim``), so both regimes run one frozen kernel.
+    (``pip_bigdim.pip_join_bigdim``), so both regimes run one frozen kernel.
     Boundary points count as inside (Touches => match)."""
     px_ = px[:, None]
     py_ = py[:, None]

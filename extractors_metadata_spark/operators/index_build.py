@@ -205,9 +205,8 @@ def lcp_expr(a: str, b: str, max_pow: int = 32) -> str:
     # ADVICE r5: the p //= 2 step sequence only realizes every LCP length
     # when max_pow is a power of two (48 -> 48,24,12,6,3,1 cannot measure
     # LCP=2) — enforce the invariant instead of silently mis-measuring
-    assert max_pow >= 1 and max_pow & (max_pow - 1) == 0, (
-        f"lcp_expr: max_pow must be a power of two, got {max_pow}"
-    )
+    if max_pow < 1 or max_pow & (max_pow - 1):
+        raise ValueError(f"lcp_expr: max_pow must be a power of two, got {max_pow}")
     powers = []
     p = int(max_pow)
     while p >= 1:

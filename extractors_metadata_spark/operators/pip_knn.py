@@ -1,35 +1,41 @@
 """Point-in-polygon and kNN spatial joins via cell-candidate pruning.
 
-Replaces the reference's O(points x polygons) full scan
-(``/root/reference/sensorposition/plotid_by_latlon.py:51-77``) with:
+The reference answers one question per document — which plot contains this
+point, else which plot is nearest — with an O(points x polygons) full scan
+(``/root/reference/sensorposition/plotid_by_latlon.py:51-77``). Every
+operator here answers it with one candidate -> refine -> fallback core:
 
-pip_join (J1):
-  1. polygon dim -> covering cells at the join resolution (driver, tiny dim)
-     -> exploded (cell, poly_idx) DataFrame, **broadcast**;
-  2. points get their cell via one Arrow-batched kernel pass;
-  3. broadcast-hash equi-join on cell = candidate pruning (no shuffle of the
-     big side — the physical plan is scan -> project -> BroadcastHashJoin);
-  4. exact vectorized ray-cast refine against broadcast prepared geometry;
-  5. boundary = contains (Touches semantics, ``plotid_by_latlon.py:57``);
-     overlap tie-break = min plot_id (engine-frozen determinism rule).
+  1. candidates: the polygon dim's covering cells are built on the driver
+     (tiny dim), DILATED by the ring radius and interval-PRUNED per cell
+     (``_poly_cells_df``), and broadcast; the narrow (id, lat, lon, cell)
+     probe — one row per point, cell encoded by one Arrow pass or taken from
+     the caller's precomputed ``cell_col`` — LEFT-joins it on cell, so each
+     (point, poly) candidate appears once and a null candidate marks
+     "nothing nearby" (``_candidates``);
+  2. refine: one Arrow pass computes the exact (contains, dist_m) per
+     candidate pair; contains is exactly dist_m == 0 and boundary points
+     count as inside (Touches semantics, ``plotid_by_latlon.py:57``);
+  3. rank: nearest-1 is a map-side-combining ``min_by`` over (dist_m,
+     plot_id) (``_nearest1``, shared by ``resolve_plots`` and
+     ``knn_join(k=1)``); top-k is one window pass that ranks AND counts;
+     ties break to min plot_id (engine-frozen; the reference's first-scanned
+     order is not reproducible, ``:63-68``);
+  4. fallback: points with no candidate, too few, or a k-th candidate beyond
+     the ring's guaranteed reach (``_ring_reach_m``) re-rank against the
+     full broadcast dim (``_full_dim``) — totality + exactness, paid only
+     for stragglers;
+  5. join-back: the wide payload joins back once at the end
+     (``_join_back``), skipped for already-narrow callers.
 
-knn_join (J2):
-  1. the polygon dim's covering cells are DILATED by the ring radius on the
-     driver (the k-ring fan-out lives in the broadcast dim — the points side
-     stays one row per point and each (point, poly) candidate is unique);
-  2. broadcast equi-join on the point's single cell -> candidates;
-  3. exact distance re-rank: Window.partitionBy(point).orderBy(dist, plot_id)
-     row_number() <= k (the reference's running argmin, ``:63-68``, with a
-     deterministic tie-break);
-  4. points whose ring finds no candidate — or whose k-th candidate is beyond
-     the ring's guaranteed reach (``_ring_reach_m``) — fall back to a
-     broadcast nested-loop pass against the full dim (totality + exactness;
-     the reference full-scans always; we only pay that for stragglers).
+``pip_join`` (containment only) runs the same probe and join-back over a
+finer, undilated covering with an INNER join and the cheaper contains-only
+refine; overlaps break to min plot_id.
 
-At 100 TB the points side never shuffles in either operator: both joins are
-broadcast-side-replicated, and the refine/re-rank is partition-local except the
-per-point window, which shuffles only the (small) candidate fan-out keyed by
-point id — AQE + optional salting (operators/skew.py) spread hot cells.
+At 100 TB the points side never shuffles before the candidate join: every
+join is broadcast-side-replicated, and the refine is partition-local; the
+per-point aggregate/window shuffles only the (small) narrow candidate
+fan-out keyed by point id — AQE + optional salting (operators/skew.py) spread
+hot cells.
 """
 
 from __future__ import annotations
@@ -41,7 +47,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
 
 from ..functions import hexgrid
-from ..functions.hexgrid import MIN_RES
 from ..functions.spark_udfs import h3_udf
 from .geometry import PreparedPolygons, ring_array
 
@@ -289,22 +294,6 @@ def _contains_udf(bc):
     return _f
 
 
-def _distance_udf(bc):
-    @pandas_udf("double")
-    def _f(poly_idx: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        prep: PreparedPolygons = bc.value
-        valid = poly_idx.notna().to_numpy()
-        out = np.full(len(poly_idx), np.nan)
-        if valid.any():
-            idx = poly_idx.to_numpy(dtype="float64")[valid].astype(np.int64)
-            out[valid] = prep.distance_m(
-                idx, lon.to_numpy(np.float64)[valid], lat.to_numpy(np.float64)[valid]
-            )
-        return pd.Series(out)
-
-    return _f
-
-
 def _contains_dist_udf(bc):
     """Fused exact refine: one Arrow pass computes (contains, dist_m) per
     candidate pair; null poly_idx (no candidate) -> (false, +inf)."""
@@ -325,6 +314,102 @@ def _contains_dist_udf(bc):
         return pd.DataFrame({"contains": out_c, "dist_m": out_d})
 
     return _f
+
+
+def _probe(spark, points, point_id, lat_col, lon_col, res, cell_col=None) -> DataFrame:
+    """NARROW-FIRST probe: only (id, lat, lon, cell) flows through the
+    candidate join, the refine kernel and the per-point ranking — at 100 TB
+    the difference between shuffling ids and shuffling documents.
+    ``cell_col``: a precomputed cell ID at exactly ``res`` (e.g. the fused
+    footprint stage's cell_r13) skips the encode pass entirely."""
+    if cell_col is not None:
+        return _ensure_parallel(
+            spark, points.select(point_id, lat_col, lon_col, F.col(cell_col).alias("cell"))
+        )
+    narrow = _ensure_parallel(spark, points.select(point_id, lat_col, lon_col))
+    return narrow.withColumn("cell", h3_udf(res)(lat_col, lon_col))
+
+
+def _refine(df: DataFrame, bc, lon_col: str, lat_col: str) -> DataFrame:
+    return df.withColumn("cd", _contains_dist_udf(bc)("poly_idx", lon_col, lat_col))
+
+
+def _candidates(spark, points, plots, point_id, lat_col, lon_col, res, ring, keep_k,
+                cell_col=None):
+    """Candidate builder: probe LEFT-joined to the broadcast ring-dilated,
+    interval-pruned covering (only polys that can win top-``keep_k`` for
+    some point in the cell survive; plot_id rides in the broadcast table),
+    then the fused refine. A point with no candidate keeps one row with a
+    null plot_id and dist_m = +inf.
+
+    Returns (candidates, prepared dim, its broadcast, ring reach column)."""
+    plots_pdf, prep, bc = _prepare(spark, plots)
+    if res is None:
+        # reach = ring radius x hex pitch; callers widen the ring (cheap: the
+        # dilation lives in the broadcast dim) rather than coarsening the res
+        # (expensive: coarser cells multiply candidates per cell).
+        res = choose_res(prep)
+    poly_cells = _poly_cells_df(
+        spark, plots_pdf, res, ring=ring, prep=prep, keep_k=keep_k, plot_ids=prep.plot_ids
+    )
+    pts = _probe(spark, points, point_id, lat_col, lon_col, res, cell_col)
+    cand = _refine(pts.join(broadcast(poly_cells), "cell", "left"), bc, lon_col, lat_col)
+    return cand, prep, bc, _ring_reach_m(ring, res, lat_col)
+
+
+def _full_dim(spark, pts: DataFrame, prep: PreparedPolygons, bc, lon_col, lat_col) -> DataFrame:
+    """Full-dim fallback builder: every point of ``pts`` against every
+    polygon (broadcast nested loop) + the fused refine."""
+    all_polys = spark.createDataFrame(
+        pd.DataFrame({"poly_idx": range(len(prep.plot_ids)), "plot_id": prep.plot_ids})
+    )
+    return _refine(pts.crossJoin(broadcast(all_polys)), bc, lon_col, lat_col)
+
+
+def _nearest1(spark, cand, prep, bc, reach, point_id, lat_col, lon_col, cache_name) -> DataFrame:
+    """Nearest-1 over the candidates -> (id, lat, lon, plot_id, contains,
+    dist_m). No dedup, no window: candidates collapse inside a map-side-
+    combining ``min_by`` over (dist_m, plot_id) — contains is dist_m == 0,
+    so containment wins first — and the only shuffle carries one
+    pre-aggregated narrow row per point. A point with no candidate has one
+    row (dist_m = +inf), so it needs no ordering field of its own.
+
+    Exactness guard: an in-ring best farther than the ring's guaranteed
+    reach could be beaten by a polygon covered just outside the ring, and a
+    no-candidate point is beyond any reach — both re-rank against the full
+    dim."""
+    keys = (point_id, lat_col, lon_col)
+
+    def best(df):
+        return (
+            df.groupBy(*keys)
+            .agg(
+                F.min_by(
+                    F.struct("plot_id", "cd.contains", "cd.dist_m"),
+                    F.struct("cd.dist_m", "plot_id"),
+                ).alias("b")
+            )
+            .select(*keys, "b.*")
+        )
+
+    # scoped persist: both branches below read it; the previous invocation's
+    # cache is released on the next call (no cross-invocation accumulation)
+    first = _cache_scoped(cache_name, best(cand))
+    ok = F.col("dist_m") <= reach
+    far = first.filter(~ok).select(*keys)
+    return first.filter(ok).unionByName(best(_full_dim(spark, far, prep, bc, lon_col, lat_col)))
+
+
+def _join_back(points, out, point_id, lat_col, lon_col, cols, cell_col=None) -> DataFrame:
+    """Payload join-back: ``out`` carries (id, lat, lon, *cols, ...); the
+    wide payload joins back once, and an already-narrow caller skips it (only
+    a caller-supplied ``cell_col`` rejoins, as it never entered ``out``)."""
+    narrow = {point_id, lat_col, lon_col} | ({cell_col} if cell_col else set())
+    if set(points.columns) != narrow:
+        out = points.join(out.select(point_id, *cols), point_id)
+    elif cell_col:
+        out = points.select(point_id, cell_col).join(out, point_id)
+    return out.select(*points.columns, *cols)
 
 
 def pip_join(
@@ -349,27 +434,17 @@ def pip_join(
         # is claimed by ~4 polys instead of ~26 (measured at the 864-plot dim:
         # 26 -> 5 candidates/point, pip_join 3.0 s -> 2.1 s at sf0.1)
         res = choose_res(prep, hi=14)
-    # plot_id rides in the broadcast covering table — no second ids join
     poly_cells = _poly_cells_df(spark, plots_pdf, res, plot_ids=prep.plot_ids)
-
-    # NARROW-FIRST: only (id, lat, lon) flows through the cell join and the
-    # refine kernel; the wide payload joins back once at the end, so the
-    # dedup shuffle carries 2 small columns, not documents.
-    narrow = _ensure_parallel(spark, points.select(point_id, lat_col, lon_col))
-    pts = narrow.withColumn("_cell", h3_udf(res)(lat_col, lon_col))
-    cand = pts.join(broadcast(poly_cells), pts["_cell"] == poly_cells["cell"], "inner")
+    # INNER join: cell misses die inside whole-stage codegen, never shuffled
+    cand = _probe(spark, points, point_id, lat_col, lon_col, res).join(
+        broadcast(poly_cells), "cell"
+    )
     hits = cand.filter(_contains_udf(bc)("poly_idx", lon_col, lat_col))
     # overlap/boundary determinism: min plot_id per point — a map-side-
-    # combining aggregate over (point_id, plot_id) only (no window sort; the
-    # single shuffle carries one pre-aggregated narrow row per matched point)
-    if set(points.columns) == {point_id, lat_col, lon_col}:
-        # already-narrow caller: lat/lon ride as grouping keys — no join-back
-        best = hits.groupBy(point_id, lat_col, lon_col).agg(
-            F.min("plot_id").alias("plot_id")
-        )
-        return best.select(*points.columns, "plot_id")
-    best = hits.groupBy(point_id).agg(F.min("plot_id").alias("plot_id"))
-    return points.join(best, point_id).select(*points.columns, "plot_id")
+    # combining aggregate over narrow rows (no window sort; the single
+    # shuffle carries one pre-aggregated row per matched point)
+    best = hits.groupBy(point_id, lat_col, lon_col).agg(F.min("plot_id").alias("plot_id"))
+    return _join_back(points, best, point_id, lat_col, lon_col, ["plot_id"])
 
 
 def knn_join(
@@ -387,153 +462,47 @@ def knn_join(
     exactly; falls back to a broadcast full-dim pass for points whose k-ring
     finds fewer than k candidates. Output: points' columns + plot_id + dist_m
     + knn_rank."""
-    plots_pdf, prep, bc = _prepare(spark, plots)
-    if res is None:
-        res = choose_res(prep)
-        # reach = ring radius x hex pitch; widen the ring (cheap: the dilation
-        # lives in the broadcast dim) rather than coarsening the res
-        # (expensive: coarser cells multiply candidates per cell).
-    # ring dilation + interval pruning on the DIM side: the probe stays one
-    # row per point, each (point, poly) candidate appears exactly once, and
-    # only polys that can win top-k for some point in the cell survive.
-    # plot_id rides in the broadcast table (no second ids join on the hot path).
-    poly_cells = _poly_cells_df(
-        spark, plots_pdf, res, ring=ring, prep=prep, keep_k=k, plot_ids=prep.plot_ids
+    cand, prep, bc, reach = _candidates(
+        spark, points, plots, point_id, lat_col, lon_col, res, ring, keep_k=k
     )
-    ids_df = spark.createDataFrame(
-        pd.DataFrame({"poly_idx": range(len(prep.plot_ids)), "plot_id": prep.plot_ids})
-    )
-    n_polys = len(prep.plot_ids)
-
-    # Narrow (id, lat, lon) columns throughout; payload joins back at the end.
-    # INNER broadcast join: ring misses die inside whole-stage codegen without
-    # ever shuffling; only hits flow on.
-    narrow = _ensure_parallel(spark, points.select(point_id, lat_col, lon_col))
-    # already-narrow caller: every branch below carries (id, lat, lon), so the
-    # final payload join-back is skipped entirely
-    points_is_narrow = set(points.columns) == {point_id, lat_col, lon_col}
-    pts = narrow.withColumn("cell", h3_udf(res)(lat_col, lon_col))
-    dist = _distance_udf(bc)
-    hits = pts.join(broadcast(poly_cells), "cell")
-
-    reach = _ring_reach_m(ring, res, lat_col)
-
+    cols = ["plot_id", "dist_m", "knn_rank"]
     if k == 1:
-        # k=1 (the reference's case): no dedup, no window — duplicates collapse
-        # inside a map-side-combining min_by; the only shuffle carries one
-        # pre-aggregated row per point.
-        scored = hits.withColumn("dist_m", dist("poly_idx", lon_col, lat_col))
-        # scoped persist: three consumers below (near, far-routing, anti-join)
-        # must not re-run the candidate join + Arrow distance pass; the cached
-        # frame is one narrow row per point.
-        best1 = _cache_scoped(
-            "knn_best1",
-            scored.groupBy(point_id, lat_col, lon_col).agg(
-                F.min_by(
-                    F.struct(F.col("plot_id"), F.col("dist_m")),
-                    F.struct(F.col("dist_m"), F.col("plot_id")),
-                ).alias("b")
-            ),
-        )
-        # exactness guard: an in-ring best farther than the ring's guaranteed
-        # reach could be beaten by a polygon whose covering cells sit just
-        # outside the ring — route those points to the exact broadcast pass.
-        near1 = best1.filter(F.col("b.dist_m") <= reach).select(
-            point_id,
-            lat_col,
-            lon_col,
-            F.col("b.plot_id").alias("plot_id"),
-            F.col("b.dist_m").alias("dist_m"),
-            F.lit(1).alias("knn_rank"),
-        )
-        far_ids = best1.filter(F.col("b.dist_m") > reach).select(point_id)
-        none_ids = narrow.select(point_id).join(
-            best1.select(point_id), point_id, "left_anti"
-        ).unionByName(far_ids)
-        all_idx1 = spark.createDataFrame(pd.DataFrame({"poly_idx": range(n_polys)}))
-        fb1 = (
-            narrow.join(none_ids, point_id, "left_semi")
-            .crossJoin(broadcast(all_idx1))
-            .join(broadcast(ids_df), "poly_idx")
-            .withColumn("dist_m", dist("poly_idx", lon_col, lat_col))
-            .groupBy(point_id, lat_col, lon_col)
-            .agg(
-                F.min_by(
-                    F.struct(F.col("plot_id"), F.col("dist_m")),
-                    F.struct(F.col("dist_m"), F.col("plot_id")),
-                ).alias("b")
-            )
-            .select(
-                point_id,
-                lat_col,
-                lon_col,
-                F.col("b.plot_id").alias("plot_id"),
-                F.col("b.dist_m").alias("dist_m"),
-                F.lit(1).alias("knn_rank"),
-            )
-        )
-        out1 = near1.unionByName(fb1)
-        if points_is_narrow:
-            return out1.select(*points.columns, "plot_id", "dist_m", "knn_rank")
-        return points.join(out1.drop(lat_col, lon_col), point_id).select(
-            *points.columns, "plot_id", "dist_m", "knn_rank"
-        )
+        out = _nearest1(
+            spark, cand, prep, bc, reach, point_id, lat_col, lon_col, "knn_best1"
+        ).withColumn("knn_rank", F.lit(1))
+        return _join_back(points, out, point_id, lat_col, lon_col, cols)
 
-    # (point, poly) candidates are already unique (the dilated covering is
-    # distinct per cell and each point has one cell) — no dedup shuffle needed
-    ranked = hits.withColumn("dist_m", dist("poly_idx", lon_col, lat_col))
-
-    # one window pass ranks candidates AND counts them, so exactness routing
-    # (fewer than k in-ring candidates -> full broadcast re-rank) costs no
-    # extra scan. tie-break on distance -> min plot_id (engine-frozen; the
-    # reference's first-scanned order is not reproducible, plotid_by_latlon.py:63-68).
-    w = Window.partitionBy(point_id).orderBy(F.col("dist_m").asc(), F.col("plot_id").asc())
+    # one window pass ranks candidates AND counts them (0 for a point whose
+    # only row is the null candidate), so exactness routing costs no extra
+    # scan; tie-break on distance -> min plot_id
+    w = Window.partitionBy(point_id).orderBy(F.col("cd.dist_m").asc(), F.col("plot_id").asc())
     wc = Window.partitionBy(point_id)
     ranked = (
-        ranked.withColumn("knn_rank", F.row_number().over(w))
+        cand.withColumn("knn_rank", F.row_number().over(w))
         .withColumn("_n_cand", F.count("plot_id").over(wc))
         # distance of the k-th in-ring candidate: the exactness bound below
         # compares it against the ring's guaranteed reach
         .withColumn(
-            "_dk", F.max(F.when(F.col("knn_rank") <= k, F.col("dist_m"))).over(wc)
+            "_dk", F.max(F.when(F.col("knn_rank") <= k, F.col("cd.dist_m"))).over(wc)
         )
     )
-    # cached once: near, few_ids, and the none_ids anti-join all read this
-    # frame — without it each branch re-runs the candidate join + UDF
+    # cached once: the in-ring answers and the fallback routing both read it
     ranked = _cache_scoped("knn_ranked", ranked)
-
-    near = ranked.filter(
-        (F.col("_n_cand") >= min(k, n_polys))
-        & (F.col("_dk") <= reach)
-        & (F.col("knn_rank") <= k)
-    ).select(point_id, lat_col, lon_col, "plot_id", "dist_m", "knn_rank")
-
-    # fallback set = points with SOME but < k candidates, plus points whose
-    # k-th candidate is beyond the ring's guaranteed reach (an out-of-ring
-    # polygon could be nearer), plus points with NO candidate at all.
-    few_ids = ranked.filter(
-        ((F.col("_n_cand") < min(k, n_polys)) | (F.col("_dk") > reach))
-        & (F.col("knn_rank") == 1)
-    ).select(point_id)
-    none_ids = narrow.select(point_id).join(
-        ranked.select(point_id).distinct(), point_id, "left_anti"
-    )
-    all_idx = spark.createDataFrame(pd.DataFrame({"poly_idx": range(n_polys)}))
+    # exact = at least k candidates, the k-th within the guaranteed reach;
+    # everything else (no or too few candidates, or an out-of-ring polygon
+    # could be nearer) re-ranks against the full dim
+    exact = (F.col("_n_cand") >= min(k, len(prep.plot_ids))) & (F.col("_dk") <= reach)
+    near = ranked.filter(exact & (F.col("knn_rank") <= k))
+    keys = (point_id, lat_col, lon_col)
+    far = ranked.filter(~exact & (F.col("knn_rank") == 1)).select(*keys)
     fb = (
-        narrow.join(few_ids.unionByName(none_ids), point_id, "left_semi")
-        .crossJoin(broadcast(all_idx))
-        .join(broadcast(ids_df), "poly_idx")
-        .withColumn("dist_m", dist("poly_idx", lon_col, lat_col))
+        _full_dim(spark, far, prep, bc, lon_col, lat_col)
         .withColumn("knn_rank", F.row_number().over(w))
         .filter(F.col("knn_rank") <= k)
-        .select(point_id, lat_col, lon_col, "plot_id", "dist_m", "knn_rank")
     )
-    out = near.unionByName(fb)
-    if points_is_narrow:
-        return out.select(*points.columns, "plot_id", "dist_m", "knn_rank")
-    return points.join(out.drop(lat_col, lon_col), point_id).select(
-        *points.columns, "plot_id", "dist_m", "knn_rank"
-    )
+    out_cols = [*keys, "plot_id", F.col("cd.dist_m").alias("dist_m"), "knn_rank"]
+    out = near.select(*out_cols).unionByName(fb.select(*out_cols))
+    return _join_back(points, out, point_id, lat_col, lon_col, cols)
 
 
 def resolve_plots(
@@ -551,111 +520,18 @@ def resolve_plots(
     containment first ('contains'), else nearest polygon ('nearest'); ties on
     either break to min plot_id (engine-frozen determinism rule).
 
-    FUSED single-pass plan (the 100 TB shape — the points side is scanned once):
-      1. one row per point LEFT-joined to the broadcast ring-DILATED
-         (cell, poly) covering table — null candidate marks 'nothing nearby'
-         (the ring fan-out lives in the dim, so the big side never explodes);
-      2. one Arrow pass computes (contains, dist) per candidate pair;
-      3. map-side-combining ``min_by`` picks the best candidate per point
-         (ordering struct: has-candidate, !contains, dist, plot_id) — a single
-         shuffle of pre-aggregated rows, no window sort;
-      4. the (rare) no-candidate points re-rank against the full broadcast dim.
+    One pass over the points side: the nearest-1 core (contains = distance
+    0, so the nearest candidate IS the containing one when there is one),
+    with ``matched_via`` read off the winner. ``cell_col``: a precomputed
+    cell ID at exactly ``res`` skips the probe's encode pass.
 
     Output: points' columns + plot_id + matched_via.
     """
-    plots_pdf, prep, bc = _prepare(spark, plots)
-    if res is None:
-        res = choose_res(prep)
-    # ring dilation + interval pruning on the DIM side (see _poly_cells_df):
-    # probe stays one row per point, candidates are unique (point, poly) pairs;
-    # plot_id rides in the broadcast table (no second ids join).
-    poly_cells = _poly_cells_df(
-        spark, plots_pdf, res, ring=ring, prep=prep, keep_k=1, plot_ids=prep.plot_ids
+    cand, prep, bc, reach = _candidates(
+        spark, points, plots, point_id, lat_col, lon_col, res, ring, keep_k=1,
+        cell_col=cell_col,
     )
-    cd = _contains_dist_udf(bc)
-
-    # NARROW-FIRST: only (id, lat, lon) flows through the candidate join, the
-    # refine kernel, and the aggregation — the wide payload (footprint strings,
-    # metadata) is joined back once at the end. At 100 TB this is the
-    # difference between shuffling ids and shuffling documents.
-    # ``cell_col``: a precomputed cell ID at exactly ``res`` (e.g. the fused
-    # footprint stage's cell_r13) skips the re-encode pass entirely.
-    if cell_col is not None:
-        pts = _ensure_parallel(
-            spark, points.select(point_id, lat_col, lon_col, F.col(cell_col).alias("cell"))
-        )
-        narrow = pts.drop("cell")
-    else:
-        narrow = _ensure_parallel(spark, points.select(point_id, lat_col, lon_col))
-        pts = narrow.withColumn("cell", h3_udf(res)(lat_col, lon_col))
-    cand = pts.join(broadcast(poly_cells), "cell", "left").withColumn(
-        "cd", cd("poly_idx", lon_col, lat_col)
-    )
-
-    ord_key = F.struct(
-        F.col("plot_id").isNull().cast("int").alias("no_cand"),
-        (~F.col("cd.contains")).cast("int").alias("not_contains"),
-        F.col("cd.dist_m").alias("dist"),
-        F.coalesce(F.col("plot_id"), F.lit("")).alias("pid"),
-    )
-    val = F.struct(
-        F.col("plot_id").alias("plot_id"),
-        F.col("cd.contains").alias("contains"),
-        F.col("cd.dist_m").alias("dist_m"),
-    )
-    # group key = point id only; partial map-side min_by collapses the
-    # candidate fan-out before the (single) shuffle. Scoped persist: both
-    # branches below read the cache; the previous invocation's cache is
-    # released on the next call (no cross-invocation accumulation).
-    best = _cache_scoped(
-        "resolve_best",
-        cand.groupBy(point_id, lat_col, lon_col).agg(F.min_by(val, ord_key).alias("best")),
-    )
-
-    def _emit(df):
-        return df.select(
-            point_id,
-            lat_col,
-            lon_col,
-            F.col("best.plot_id").alias("plot_id"),
-            F.when(F.col("best.contains"), "contains")
-            .otherwise("nearest")
-            .alias("matched_via"),
-        )
-
-    # exactness guard (same bound as knn_join): a non-contained nearest match
-    # farther than the ring's guaranteed reach could be beaten by a polygon
-    # covered just outside the ring -> exact broadcast re-rank for those.
-    reach = _ring_reach_m(ring, res, lat_col)
-    ok = F.col("best.plot_id").isNotNull() & (
-        F.col("best.contains") | (F.col("best.dist_m") <= reach)
-    )
-    resolved_n = _emit(best.filter(ok))
-
-    # totality + exactness fallback: no covering cell within the ring, or the
-    # in-ring nearest is beyond the soundness bound -> broadcast full dim
-    missing = best.filter(~ok).select(point_id, lat_col, lon_col)
-    all_polys = spark.createDataFrame(
-        pd.DataFrame({"poly_idx": range(len(prep.plot_ids)), "plot_id": prep.plot_ids})
-    )
-    fb_ord = F.struct(
-        (~F.col("cd.contains")).cast("int").alias("not_contains"),
-        F.col("cd.dist_m").alias("dist"),
-        F.col("plot_id").alias("pid"),
-    )
-    fb = _emit(
-        missing.crossJoin(broadcast(all_polys))
-        .withColumn("cd", cd("poly_idx", lon_col, lat_col))
-        .groupBy(point_id, lat_col, lon_col)
-        .agg(F.min_by(val, fb_ord).alias("best"))
-    )
-    out = resolved_n.unionByName(fb)
-    base_cols = {point_id, lat_col, lon_col} | ({cell_col} if cell_col else set())
-    if set(points.columns) == base_cols:
-        # already-narrow caller: no payload to join back
-        if cell_col:
-            return points.select(point_id, cell_col).join(
-                out, point_id
-            ).select(*points.columns, "plot_id", "matched_via")
-        return out.select(*points.columns, "plot_id", "matched_via")
-    return points.join(out.drop(lat_col, lon_col), point_id)
+    out = _nearest1(
+        spark, cand, prep, bc, reach, point_id, lat_col, lon_col, "resolve_best"
+    ).withColumn("matched_via", F.when(F.col("contains"), "contains").otherwise("nearest"))
+    return _join_back(points, out, point_id, lat_col, lon_col, ["plot_id", "matched_via"], cell_col)

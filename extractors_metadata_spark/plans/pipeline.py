@@ -119,11 +119,6 @@ def datapoints(spark: SparkSession, pages: DataFrame, plots) -> DataFrame:
     return _assemble_datapoints(_resolved(spark, pages, plots))
 
 
-def tiles_for(datapoints_df: DataFrame, zooms=(9, 10, 11, 12, 13, 14)) -> DataFrame:
-    """Tile assignment needs the bbox columns — run on the footprint frame."""
-    return tile_assign(datapoints_df, zooms=zooms)
-
-
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,

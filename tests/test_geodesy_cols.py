@@ -1,8 +1,8 @@
 """JVM column-tree geometry stage vs the NumPy reference kernels.
 
-The JVM twin (jvm=True — the non-default escape hatch; the shipped pipeline
-default is the Arrow/NumPy path, jvm=False) must agree with the Arrow/NumPy
-path the goldens pin: coordinates to 1e-9 deg (~0.1 um — java.lang.Math vs libm ulp
+The JVM twin (``geodesy_cols.footprint_cells_cols``, the codegen reference;
+the shipped pipeline runs the Arrow/NumPy ``with_footprint_cells``) must agree
+with the Arrow/NumPy path the goldens pin: coordinates to 1e-9 deg (~0.1 um — java.lang.Math vs libm ulp
 drift only) and cell IDs exactly on the synthetic corpus (boundary-safe by
 construction: a cell flip requires a coordinate within ~1e-10 deg of a hex
 edge, and downstream joins are ring-dilated + exactly refined regardless)."""
@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from extractors_metadata_spark.functions.geodesy_cols import footprint_cells_cols
 from extractors_metadata_spark.plans.parse import parse_metadata, with_footprint_cells
 from extractors_metadata_spark.synth import synth_webpages
 
@@ -23,10 +24,10 @@ COORD_COLS = [
 def both(spark):
     parsed = parse_metadata(synth_webpages(spark, 20000)).cache()
     parsed.count()
-    j = with_footprint_cells(parsed, jvm=True).select(
+    j = footprint_cells_cols(parsed).select(
         "url", *COORD_COLS, "cell_r9", "s2_cell", "cell_r13", "footprint"
     )
-    p = with_footprint_cells(parsed, jvm=False).select(
+    p = with_footprint_cells(parsed).select(
         "url", *COORD_COLS, "cell_r9", "s2_cell", "cell_r13", "footprint"
     )
     jv = {r.url: r for r in j.collect()}
@@ -65,6 +66,6 @@ def test_footprint_strings_identical(both):
 
 
 def test_jvm_stage_has_no_python(spark):
-    df = with_footprint_cells(parse_metadata(synth_webpages(spark, 10)), jvm=True)
+    df = footprint_cells_cols(parse_metadata(synth_webpages(spark, 10)))
     plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
     assert "EvalPython" not in plan

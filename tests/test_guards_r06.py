@@ -7,7 +7,7 @@ def test_lcp_expr_rejects_non_power_of_two_max_pow():
     from extractors_metadata_spark.operators.index_build import lcp_expr
 
     # 48 -> 48,24,12,6,3,1 cannot measure LCP=2 (ADVICE r5)
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="power of two"):
         lcp_expr("a", "b", max_pow=48)
     # powers of two still work
     assert "substr" in lcp_expr("a", "b", max_pow=32)

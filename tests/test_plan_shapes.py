@@ -69,6 +69,21 @@ def test_knn_join_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
+@pytest.mark.parametrize("k", [1, 3])
+def test_knn_join_has_no_anti_join(spark, k):
+    """Points with no ring candidate reach the full-dim fallback through the
+    LEFT candidate join's null row, not through a left-anti join."""
+    from extractors_metadata_spark.operators.pip_knn import knn_join
+    from extractors_metadata_spark.synth import plot_rings
+
+    pts = spark.createDataFrame(
+        pd.DataFrame({"url": ["a"], "centroid_lat": [33.0740], "centroid_lon": [-111.9748]})
+    )
+    plan = _explain(knn_join(spark, pts, plot_rings(), k=k))
+    assert "LeftAnti" not in plan
+    assert "BroadcastHashJoin" in plan
+
+
 def test_parquet_filter_pushdown(spark):
     df = (
         spark.read.parquet("/root/testdata/sf0.001/events.parquet")

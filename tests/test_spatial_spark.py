@@ -92,6 +92,53 @@ def test_far_point_fallback(spark, plots_pdf):
     assert out[0].dist_m > 1e6
 
 
+def _bruteforce_topk(prep, lat, lon, k):
+    idx = np.arange(len(prep.plot_ids))
+    d = prep.distance_m(idx, np.full(len(idx), lon), np.full(len(idx), lat))
+    ids = np.array(prep.plot_ids)
+    order = np.lexsort((ids, d))[:k]
+    return [str(ids[i]) for i in order], d[order]
+
+
+def test_far_point_k3_fallback_exact(spark, plots_pdf, prep):
+    """A point with no candidate in its ring (Paris) routes to the full-dim
+    re-rank through the window's zero candidate count: exactly k rows, equal
+    to the brute-force top-3."""
+    lat, lon = 48.85, 2.35
+    out = knn_join(spark, _pts_df(spark, [("far", lat, lon)]), plots_pdf, k=3).collect()
+    rows = sorted(out, key=lambda r: r.knn_rank)
+    assert [r.knn_rank for r in rows] == [1, 2, 3]
+    exp_ids, exp_d = _bruteforce_topk(prep, lat, lon, 3)
+    assert [r.plot_id for r in rows] == exp_ids
+    assert np.allclose([r.dist_m for r in rows], exp_d, rtol=0, atol=1e-6)
+
+
+def test_knn1_and_resolve_agree(spark, plots_pdf, prep):
+    """knn_join(k=1) and resolve_plots share one nearest-1 path: same plot
+    over inside, boundary, corner, just-outside and far points, and
+    dist_m == 0 exactly where matched_via == 'contains'."""
+    rows = [
+        ("inside", GOLD_LAT, GOLD_LON),
+        ("edge", GRID_LAT0 + 5 * GRID_DLAT, GRID_LON0 + 2.5 * GRID_DLON),
+        ("corner", GRID_LAT0 + 10 * GRID_DLAT, GRID_LON0 + 4 * GRID_DLON),
+        ("south", GRID_LAT0 - 0.00002, GRID_LON0 + 1.5 * GRID_DLON),
+        ("west", GRID_LAT0 + 7.3 * GRID_DLAT, GRID_LON0 - 0.0003),
+        ("out", GRID_LAT0 - 0.001, GRID_LON0 + 1.5 * GRID_DLON),
+        ("far", 48.85, 2.35),
+    ]
+    df = _pts_df(spark, rows)
+    knn = {r.url: r for r in knn_join(spark, df, plots_pdf, k=1).collect()}
+    res = {r.url: r for r in resolve_plots(spark, df, plots_pdf).collect()}
+    assert set(knn) == set(res) == {r[0] for r in rows}
+    for url, lat, lon in rows:
+        assert knn[url].plot_id == res[url].plot_id, url
+        assert knn[url].plot_id == _bruteforce_topk(prep, lat, lon, 1)[0][0], url
+        assert (knn[url].dist_m == 0.0) == (res[url].matched_via == "contains"), url
+    assert {u for u, r in res.items() if r.matched_via == "contains"} == {
+        "inside", "edge", "corner"
+    }
+
+
 def test_resolve_matches_bruteforce(spark, points, plots_pdf, prep):
     res = resolve_plots(spark, points, plots_pdf)
     got = {r.url: (r.plot_id, r.matched_via) for r in res.collect()}
